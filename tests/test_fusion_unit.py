@@ -147,49 +147,6 @@ def test_paginate_bounded_window_and_guard(spark):
     assert [r["doc_id"] for r in kp.collect()] == [10, 11, 12, 13, 14]
 
 
-def test_connected_components_chain_star_singleton(spark):
-    """Min-label propagation must reach the transitive closure: a chain
-    (needs multiple iterations), a star, and untouched singletons."""
-    from vector_search_application_spark.operators import dedup
-
-    # chain 1-2-3-4-5, star 10-(11,12,13), pair 20-21; 30/31 singletons
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)],
-        ["id_a", "id_b"],
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 5, 10, 11, 12, 13, 20, 21, 30, 31]], ["id"]
-    )
-    got = {
-        r["id"]: r["canonical_id"]
-        for r in dedup.connected_components(pairs, nodes).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-                   10: 10, 11: 10, 12: 10, 13: 10,
-                   20: 20, 21: 20, 30: 30, 31: 31}
-
-
-def test_connected_components_double_step_parities(spark):
-    """The r13 loop propagates TWICE per convergence check, detecting
-    the fixpoint on the second step alone. Chains of every diameter
-    parity around the cycle boundary must still land on the exact
-    min-label closure — including the case where the fixpoint is
-    reached on the FIRST step of a cycle (odd diameters) and the
-    second step must report no change rather than a phantom one."""
-    from vector_search_application_spark.operators import dedup
-
-    for n in (2, 3, 4, 5, 6, 7):  # chain 0-1-...-n-1, diameter n-1
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
-        )
-        nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-        got = {
-            r["id"]: r["canonical_id"]
-            for r in dedup.connected_components(pairs, nodes).collect()
-        }
-        assert got == {i: 0 for i in range(n)}, f"chain of {n}"
-
-
 def test_tracked_persist_releases_orphaned_caches(spark):
     """release_all must free caches whose Python references died inside
     an operator (a weak registry would have dropped them — the exact
@@ -211,15 +168,16 @@ def test_tracked_persist_releases_orphaned_caches(spark):
     assert cache.release_all() == 0  # registry cleared
 
 
-def test_connected_components_star_matches_union_find(spark):
+def test_connected_components_star_matches_union_find(spark, monkeypatch):
     """Large-star/small-star must find exactly the union-find
-    components on random graphs PLUS a diameter-30 chain (which the
-    min-label variant refuses under its iteration cap)."""
+    components on random graphs plus shapes where min-label
+    propagation would need one round per hop: a diameter-30 chain, a
+    256-node path whose ids are shuffled along it, chains of 2-7
+    nodes, a star, a pair and untouched singletons. Past its round
+    cap the operator refuses rather than return partial labels."""
     import random
 
-    import pytest as _pytest
-
-    from vector_search_application_spark.operators import dedup
+    import pytest
 
     rng = random.Random(11)
     base = list(range(60))
@@ -229,8 +187,22 @@ def test_connected_components_star_matches_union_find(spark):
         if a != b
     ]
     chain = [(i, i + 1) for i in range(100, 130)]  # diameter 30
-    all_pairs = rand_pairs + chain
-    all_ids = sorted(set(base) | {x for p in chain for x in p})
+    # chain 200-...-204, star 210-(211,212,213), pair 220-221
+    shapes = [(200, 201), (201, 202), (202, 203), (203, 204),
+              (210, 211), (210, 212), (210, 213), (220, 221)]
+    short_chains = [
+        (300 + 10 * n + i, 300 + 10 * n + i + 1)
+        for n in range(2, 8)
+        for i in range(n - 1)
+    ]
+    path_ids = list(range(1000, 1256))
+    rng.shuffle(path_ids)
+    path = list(zip(path_ids, path_ids[1:]))
+    all_pairs = rand_pairs + chain + shapes + short_chains + path
+    singletons = {230, 231}
+    all_ids = sorted(
+        set(base) | singletons | {x for p in all_pairs for x in p}
+    )
 
     # union-find ground truth; attaching max root under min root makes
     # every root the minimum of its component
@@ -252,13 +224,13 @@ def test_connected_components_star_matches_union_find(spark):
     nodes_df = spark.createDataFrame([(i,) for i in all_ids], ["id"])
     got = {
         r["id"]: r["canonical_id"]
-        for r in dedup.connected_components_star(pairs_df, nodes_df).collect()
+        for r in dedup.connected_components(pairs_df, nodes_df).collect()
     }
     assert got == want
 
-    # the min-label variant refuses the same chain under a small cap
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs_df, nodes_df, max_iters=5)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not stabilize"):
+        dedup.connected_components(pairs_df, nodes_df)
 
 
 def test_exact_cascade_batch_matches_single(spark):

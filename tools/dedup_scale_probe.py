@@ -404,11 +404,12 @@ because BUCKET COUNT, not plan shape, is the quadratic term:
    rate ~2.4e-15, zero expected false pairs below ~1e9 docs.
 2. **False-pair giant component.** Those ~260k random cross-replica
    edges over 600k nodes put the pair graph past the Erdos-Renyi
-   threshold; `dedup_components` star-contraction exceeded its
-   25-iteration cap on the giant component's diameter — the operator
-   refused (by design) rather than returning split components. The
-   64-bit fingerprint removes the random edges; components converge
-   again.
+   threshold; `dedup_components`, then min-label propagation,
+   exceeded its 25-iteration cap on the giant component's diameter —
+   the operator refused (by design) rather than returning split
+   components. The 64-bit fingerprint removes the random edges;
+   components converge again. Star contraction, which has since
+   replaced min-label propagation, needs O(log n) rounds on any shape.
 3. **Fixed 256-bucket hyperplane LSH went quadratic.** Single-table
    8-plane blocking: candidates ~N^2/256 — embedding_neardup went
    2.0s (x10) -> 384.5s (x100) while verified pairs stayed linear.

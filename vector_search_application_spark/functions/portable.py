@@ -54,14 +54,6 @@ def md5_long_sql(expr: str, seed: str = "") -> str:
     return f"('0x' || substr(md5({payload}), 1, 15))::BIGINT"
 
 
-def sha256_hex(col: Column) -> Column:
-    return F.sha2(col, 256)
-
-
-def sha256_hex_sql(expr: str) -> str:
-    return f"sha256({expr})"
-
-
 # ---------------------------------------------------------------------------
 # tokenizer
 # ---------------------------------------------------------------------------

@@ -691,149 +691,42 @@ def simhash_pairs(
 # Connected components: dup pairs -> clusters -> canonical representative
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """(id, canonical_id): cluster duplicate PAIRS into components and
-    elect the min id as each component's canonical representative —
-    the step a training pipeline runs after any pair-producing dedup
-    (keep rows where id = canonical_id; singletons map to themselves).
-
-    Min-label propagation: every node starts as its own label; each
-    propagation every node takes the min label among itself and its
-    neighbors; converged when no label changes. Each loop ITERATION
-    runs TWO propagations (r13), so iterations = ceil(component
-    DIAMETER / 2) + 1 and the non-convergence refusal below fires only
-    past 2*max_iters propagations — near-dup clusters are shallow
-    (pairs/stars/short chains), so this converges in a handful of
-    rounds even at corpus scale; for adversarially long chains the
-    alternating large-star/small-star variant (O(log n) rounds) is the
-    drop-in upgrade.
-
-    Scale shape per iteration: one key-join (edges hash-partitioned by
-    src) + one groupBy(dst) min — both map-side-combinable; labels are
-    localCheckpoint'ed each round so the plan stays one-iteration deep
-    (no exponential lineage), and the convergence probe is a single
-    count per round. Only EDGE ENDPOINTS enter the loop — a node with
-    no dup pair can never change its label, so the iterated table is
-    the (typically tiny) duplicate-touched slice of the corpus;
-    singletons are appended as their own canonical at the end.
-    """
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-    # materialize the edge list ONCE: `pairs` is usually the output of
-    # an expensive candidate join (banded simhash, LSH buckets) and is
-    # referenced by every round's join plus the singleton split — left
-    # as lineage it would recompute per round
-    edges = edges.localCheckpoint(eager=True)
-    endpoints = edges.select(F.col("src").alias("id")).distinct()
-    all_nodes = nodes.select("id")
-    singletons = all_nodes.join(endpoints, "id", "left_anti").select(
-        "id", F.col("id").alias("canonical_id")
-    )
-    labels = endpoints.select("id", F.col("id").alias("canonical_id"))
-    labels = labels.localCheckpoint(eager=True)
-    lbl_type = labels.schema["canonical_id"].dataType
-
-    def _propagate(lbls: DataFrame) -> DataFrame:
-        # one join + ONE keyed aggregation per propagation (r13):
-        # neighbor label candidates union the node's own labeled row —
-        # tagged with its old label — and a single groupBy(id) takes
-        # the min candidate as the new label while max(old) recovers
-        # the previous one (every loop id has exactly one own row;
-        # nulls from neighbor rows are ignored). The earlier shape
-        # aggregated neighbor minima separately and LEFT-JOINED them
-        # back onto labels: a second shuffle + join per propagation
-        # that this folds into the same aggregation. Update rule
-        # unchanged (min over self and neighbors), so the fixpoint is
-        # identical.
-        cand = edges.join(lbls, edges["src"] == lbls["id"]).select(
-            F.col("dst").alias("id"),
-            F.col("canonical_id").alias("cand"),
-            F.lit(None).cast(lbl_type).alias("old"),
-        )
-        own = lbls.select(
-            "id",
-            F.col("canonical_id").alias("cand"),
-            F.col("canonical_id").alias("old"),
-        )
-        return (
-            cand.unionByName(own)
-            .groupBy("id")
-            .agg(F.min("cand").alias("canonical_id"), F.max("old").alias("old"))
-        )
-
-    for _ in range(max_iters):
-        # TWO propagation steps per driver sync (r13): the sequential
-        # cost of the loop at small per-round data is the action +
-        # convergence-count barrier, not the shuffles — stepping twice
-        # between barriers halves them. Convergence is detected on the
-        # SECOND step alone, which is exact: if propagating `mid`
-        # changed nothing, `mid` IS the fixpoint and the returned
-        # labels equal it; min-label fixpoints are unique, so the
-        # output is identical to the one-step loop's (at most one
-        # redundant propagation of already-converged labels is paid).
-        mid = _propagate(labels).select("id", "canonical_id")
-        updated = (
-            _propagate(mid)
-            .select(
-                "id",
-                F.col("canonical_id").alias("new_canonical"),
-                (F.col("canonical_id") < F.col("old")).alias("__changed"),
-            )
-            # lazy checkpoint: the convergence aggregate right below is
-            # the cycle's ONE action — it materializes (and truncates)
-            # the checkpoint as a side effect, instead of paying a
-            # separate eager-checkpoint job per cycle
-            .localCheckpoint(eager=False)
-        )
-        changed = updated.agg(F.sum(F.col("__changed").cast("int"))).first()[0]
-        labels = updated.select(
-            "id", F.col("new_canonical").alias("canonical_id")
-        )
-        if not changed:
-            return labels.select("id", "canonical_id").unionByName(singletons)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} iterations "
-        f"({2 * max_iters} propagations — a component's diameter exceeds "
-        "the cap); raise max_iters, or use the large-star/small-star "
-        "variant for adversarially long chains — returning partial labels "
-        "would silently split components"
-    )
+# Round cap for connected_components: star contraction needs O(log n)
+# rounds on any component shape, so 40 is far past any real corpus
+STAR_MAX_ROUNDS = 40
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 40,
-) -> DataFrame:
-    """(id, canonical_id) via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the scale sibling of ``connected_components``: min-label
-    propagation needs DIAMETER rounds (fine for shallow dup clusters,
-    fatal on long chains), the star operations converge in
-    O(log n) rounds on ANY graph shape.
+def connected_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(id, canonical_id): cluster duplicate (id_a, id_b) PAIRS into
+    components and elect the min id as each component's canonical
+    representative — the step a training pipeline runs after any
+    pair-producing dedup (keep rows where id = canonical_id; nodes
+    with no pair map to themselves).
+
+    Alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): converges in
+    O(log n) rounds on ANY graph shape, so no component diameter —
+    long chains included — sets the round count.
 
     large-star: every node links its strictly-larger neighbors to the
     minimum of its closed neighborhood; small-star: links its
     smaller-or-equal neighbors there. Alternating the two contracts
     every component to a star whose center is the component minimum.
-    Each operation is one groupBy(min) + explode — the same
-    key-partitioned shape per round as label propagation; edges are
-    localCheckpoint'ed per round (plans stay one-round deep).
-    Convergence = edge multiset stable (count + order-insensitive
-    hash), checked from the materialized result at no extra pass.
+    Each operation is one groupBy(min) + explode, both key-partitioned;
+    edges are localCheckpoint'ed per round (plans stay one-round deep).
+    Convergence = edge multiset stable between two rounds (count +
+    order-insensitive hash), checked from the materialized result at no
+    extra pass; round outputs all point larger -> smaller id, so the
+    symmetric input edge set is never compared. Past STAR_MAX_ROUNDS
+    the operator refuses rather than return partial labels, which
+    would silently split components.
     """
     both = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).unionByName(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
+        F.col("id_a").alias("u"), F.col("id_b").alias("v")
+    ).unionByName(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
+    # materialize the edge list ONCE: `pairs` is usually the output of
+    # an expensive candidate join (banded simhash, LSH buckets) that
+    # every round would otherwise recompute
     edges = both.filter(F.col("u") != F.col("v")).distinct()
     edges = edges.localCheckpoint(eager=True)
     all_nodes = nodes.select("id")
@@ -872,8 +765,8 @@ def connected_components_star(
         ).first()
         return row["n"], row["h"]
 
-    sig = _sig(edges)
-    for _ in range(max_iters):
+    sig = None
+    for _ in range(STAR_MAX_ROUNDS):
         edges = _small_star(_large_star(edges))
         # lazy: the _sig aggregate below materializes the checkpoint —
         # one action per round instead of two (r13)
@@ -884,7 +777,7 @@ def connected_components_star(
         sig = new_sig
     else:
         raise RuntimeError(
-            f"star contraction did not stabilize in {max_iters} rounds"
+            f"star contraction did not stabilize in {STAR_MAX_ROUNDS} rounds"
         )
     # stars: every remaining edge points a node at its component min
     members = edges.select(F.col("u").alias("id"), F.col("v").alias("canonical_id"))

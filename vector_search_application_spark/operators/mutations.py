@@ -7,8 +7,7 @@ app/services/version_service.py:49-239). Spark-first, every mutation is
 a set operation producing a new table snapshot:
 
   upsert (M1)        new UNION (old ANTI-JOIN new on key)
-  delete (M2)        old ANTI-JOIN ids
-  cleanup_old (M3)   old ANTI-JOIN new  -> the rows to delete; the
+  cleanup_old (M2/3) old ANTI-JOIN new  -> the rows to delete; the
                      surviving table is old SEMI-JOIN new
   delta detect (T4)  content-hash equality join: insert/update/delete
                      classification in ONE full-outer join pass
@@ -93,11 +92,6 @@ def upsert(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """M1: MERGE-equivalent — new rows win, unmatched old rows survive."""
     surviving_old = old.join(new.select(key), key, "left_anti")
     return new.unionByName(surviving_old)
-
-
-def delete_ids(df: DataFrame, ids: DataFrame, key: str) -> DataFrame:
-    """M2: delete-by-id-list as an anti join."""
-    return df.join(ids.select(key), key, "left_anti")
 
 
 def cleanup_old(old: DataFrame, new: DataFrame, key: str) -> DataFrame:

@@ -949,10 +949,11 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup CLUSTERING: the simhash pair list folded into connected
     components with a canonical (min-id) representative per component
     — every doc mapped, singletons to themselves; 'dedup' = keep rows
-    where doc_id = canonical_id. The Spark side iterates min-label
-    propagation (operators/dedup.connected_components); the oracle
-    computes the same fixpoint with a recursive CTE, so the iterative
-    operator is held to a closed-form transitive-closure answer."""
+    where doc_id = canonical_id. The Spark side contracts every
+    component to a star on its min id by alternating large-star/
+    small-star rounds (operators/dedup.connected_components); the
+    oracle walks the same transitive closure with a recursive CTE, so
+    the iterative operator is held to a closed-form answer."""
     docs = dedup_docs(spark, sf_dir)
     sims = dedup.simhash(docs, "doc_id", "text")
     pairs = dedup.simhash_pairs(sims, max_hamming=3).select("id_a", "id_b")
@@ -1133,9 +1134,9 @@ SELECT component, doc_id AS keep_id, quality FROM ranked WHERE rn = 1
 def q_dedup_canonical_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical selection a real pipeline runs after clustering: per
     dup component keep the HIGHEST-QUALITY member (tie: min doc_id),
-    not the arbitrary min-id one — composes the iterative components
-    operator with the text-quality scorer; one window over (component)
-    after a key-join, nothing corpus-wide."""
+    not the arbitrary min-id one — composes the star-contraction
+    components operator with the text-quality scorer; one window over
+    (component) after a key-join, nothing corpus-wide."""
     from ..operators import topk as topk_ops
 
     docs = dedup_docs(spark, sf_dir)
@@ -1153,27 +1154,6 @@ def q_dedup_canonical_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return best.select(
         "component", F.col("doc_id").alias("keep_id"), F.col("score").alias("quality")
     )
-
-
-@declare(
-    "dedup_components_star",
-    _COMPONENTS_SQL,  # identical semantics to dedup_components — the
-    # oracle doesn't care which distributed algorithm produced the labels
-    survey_ids="dedup-components",
-)
-def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The O(log n)-rounds sibling of dedup_components: alternating
-    large-star/small-star contraction (correct on ANY component shape,
-    incl. chains longer than min-label's iteration budget — validated
-    against union-find ground truth in tests/test_fusion_unit.py).
-    Same simhash pair list, same recursive-CTE oracle."""
-    docs = dedup_docs(spark, sf_dir)
-    sims = dedup.simhash(docs, "doc_id", "text")
-    pairs = dedup.simhash_pairs(sims, max_hamming=3).select("id_a", "id_b")
-    comps = dedup.connected_components_star(
-        pairs, docs.select(F.col("doc_id").alias("id"))
-    )
-    return comps.select(F.col("id").alias("doc_id"), "canonical_id")
 
 
 # --- semantic dedup (SemDeDup): cluster, then intra-cluster cosine -------
