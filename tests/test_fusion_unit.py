@@ -147,6 +147,42 @@ def test_paginate_bounded_window_and_guard(spark):
     assert [r["doc_id"] for r in kp.collect()] == [10, 11, 12, 13, 14]
 
 
+def test_connected_components_chain_star_singleton(spark):
+    """Star contraction must reach the transitive closure: a chain
+    (needs more than one round), a star, and untouched singletons."""
+    # chain 1-2-3-4-5, star 10-(11,12,13), pair 20-21; 30/31 singletons
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)],
+        ["id_a", "id_b"],
+    )
+    nodes = spark.createDataFrame(
+        [(i,) for i in [1, 2, 3, 4, 5, 10, 11, 12, 13, 20, 21, 30, 31]], ["id"]
+    )
+    got = {
+        r["id"]: r["canonical_id"]
+        for r in dedup.connected_components(pairs, nodes).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
+                   10: 10, 11: 10, 12: 10, 13: 10,
+                   20: 20, 21: 20, 30: 30, 31: 31}
+
+
+def test_connected_components_double_step_parities(spark):
+    """Chains of every diameter parity from 1 to 6 must land on the
+    exact min-label closure, whether the fixpoint is reached on a
+    large-star or a small-star step."""
+    for n in (2, 3, 4, 5, 6, 7):  # chain 0-1-...-n-1, diameter n-1
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
+        )
+        nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
+        got = {
+            r["id"]: r["canonical_id"]
+            for r in dedup.connected_components(pairs, nodes).collect()
+        }
+        assert got == {i: 0 for i in range(n)}, f"chain of {n}"
+
+
 def test_tracked_persist_releases_orphaned_caches(spark):
     """release_all must free caches whose Python references died inside
     an operator (a weak registry would have dropped them — the exact
